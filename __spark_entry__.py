@@ -216,18 +216,6 @@ def _desc_str(c):
     )
 
 
-def q08_funnel_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A1/K3: funnel counters — groupBy + conditional sums."""
-    ev = _t(spark, sf_dir, "events")
-    return ev.groupBy("event_type").agg(
-        F.count("*").alias("n"),
-        F.countDistinct("user_id").alias("n_users"),
-        F.round(
-            F.sum(F.col("value").cast("decimal(18,2)")).cast("double"), 2
-        ).alias("sum_value"),
-    )
-
-
 def q09_coalesce_precedence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """V9/V11: precedence chain via coalesce (category/published_at rule)."""
     o = _t(spark, sf_dir, "orders")
@@ -447,40 +435,6 @@ def q16_text_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(quality_score(F.col("text")), 6).alias("quality"),
         lang_id(F.col("text")).alias("lang_guess"),
         fingerprint(F.col("text")).alias("fp"),
-    )
-
-
-def q16_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from spark_frontier.analytics.textstats import subword_count, token_count
-
-    return _t(spark, sf_dir, "documents").select(
-        "doc_id",
-        token_count(F.col("text")).alias("n_tokens"),
-        subword_count(F.col("text")).alias("n_subwords"),
-    )
-
-
-def q17_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from spark_frontier.analytics.textstats import quality_score
-
-    return _t(spark, sf_dir, "documents").select(
-        "doc_id", F.round(quality_score(F.col("text")), 6).alias("quality")
-    )
-
-
-def q18_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from spark_frontier.analytics.textstats import lang_id
-
-    return _t(spark, sf_dir, "documents").select(
-        "doc_id", lang_id(F.col("text")).alias("lang_guess")
-    )
-
-
-def q19_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from spark_frontier.analytics.textstats import fingerprint
-
-    return _t(spark, sf_dir, "documents").select(
-        "doc_id", fingerprint(F.col("text")).alias("fp")
     )
 
 

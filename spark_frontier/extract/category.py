@@ -436,7 +436,6 @@ def with_category(
     site_type: str = "site_type",
     sport_focus: str = "sport_focus",
     out: str = "sport_category",
-    dedup_content: bool = False,
     step34_kernel: bool = False,
 ):
     """Full V6-V9 precedence chain (category_detector.py:144-206), all JVM:
@@ -449,17 +448,7 @@ def with_category(
     regexp_count pass), and the guard keeps CollapseProject from re-inlining
     the 230-regex sums into the argmax expression. The static Column
     fragments are built once per session (_session_cached) and the
-    per-category score columns land in ONE withColumns call.
-
-    ``dedup_content=True``: the content-score step (tokenize + keyword
-    counts + argmax — a pure function of the scored text) is evaluated
-    once per DISTINCT text and broadcast-joined back, instead of per row
-    (guide §2.2 partial-evaluation analogue of the per-image validation
-    dedup). Value-identical by construction — the same expressions run on
-    the distinct texts (parity test). Callers gate on the expected text
-    cardinality (the crawl cycle: captions ride the originals store, so
-    its row count bounds the distinct set; the broadcast is ~20 B/text)."""
-    assert not (dedup_content and step34_kernel)
+    per-category score columns land in ONE withColumns call."""
     t, c = F.col(title), F.col(content)
     forced = F.when(
         (F.lower(F.coalesce(F.col(site_type), F.lit(""))) == "specific")
@@ -521,32 +510,6 @@ def with_category(
         ("hits_expr",), lambda: F.expr(hits_expr_sql("_cs_txt"))
     )
     content_cat = _session_cached(("content_cat",), _build_content_cat)
-
-    if dedup_content:
-        # score each DISTINCT text once (resolved rows collapse onto the
-        # single "" text, which scores 0 → NULL content category, exactly
-        # as the per-row guard produced), broadcast the (text → category)
-        # table back. Distinct is a map-side partial aggregate; the
-        # broadcast side is one row per distinct text.
-        raw_scores = _session_cached(
-            ("raw_score_cols",), lambda: content_score_columns("_cs_txt")
-        )
-        texts = (
-            step.select("_cs_txt").distinct()
-            .withColumn("_cs_hits", hits_col)
-            .withColumns({f"_cs_{cat}": s for cat, s in raw_scores.items()})
-            .select("_cs_txt", content_cat.alias("_content_cat"))
-        )
-        return (
-            step.join(F.broadcast(texts), on="_cs_txt", how="left")
-            .withColumn(
-                out,
-                F.coalesce(
-                    F.col("_resolved"), F.col("_content_cat"), F.lit("sports")
-                ),
-            )
-            .drop("_resolved", "_cs_txt", "_content_cat")
-        )
 
     # the shared tokenize+mask pass (hits_expr_sql): referenced by all
     # five score columns, so CollapseProject keeps it materialized

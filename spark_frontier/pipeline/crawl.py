@@ -18,18 +18,18 @@ north_rule's per-batch lineage.
 RESUMABILITY: a cycle processes the frontier in WAVES (max_per_host per
 host per wave). Every table commit rides an async lane keyed by table
 (strictly ordered within a table, concurrent across tables), and all
-lanes are fully drained before the cycle returns. The seen-filter is
-maintained by NEXT-cycle init catch-up (bloom_catchup/cuckoo_catchup
-fold the links delta in on the init thread, overlapped with discovery)
-— a filter whose ``covers_links`` lags the links HEAD is caught up
-incrementally, and one that can't be (retention rewrote the range) is
-rebuilt. A kill loses at most one uncommitted wave — its keys are
-still absent from links, so a resumed cycle re-crawls exactly that wave
-and the append stays duplicate-free; a bloom whose ``covers_links``
-provenance doesn't match the links HEAD is rebuilt, so no crash ordering
-can leak a duplicate past the bloom short-circuit.
-``test_resume_equals_uninterrupted`` kills after wave 1 and proves the
-final links table equals the uninterrupted run's.
+lanes are fully drained before the cycle returns. The URL-seen filter
+(bloom, or cuckoo with ``seen_filter='cuckoo'``) has one lifecycle,
+``functions/seen_filter.py``: the NEXT cycle's init thread catches it up
+with the links delta (``bloom_catchup``/``cuckoo_catchup``, overlapped
+with discovery), or rebuilds it when its ``covers_links`` provenance
+can't be caught up (retention rewrote the range). A kill loses at most
+one uncommitted wave — its keys are still absent from links, so a
+resumed cycle re-crawls exactly that wave and the append stays
+duplicate-free; no crash ordering can leak a duplicate past the filter
+short-circuit, because a filter is trusted only for the links snapshot
+it records. ``test_resume_equals_uninterrupted`` kills after wave 1 and
+proves the final links table equals the uninterrupted run's.
 """
 
 from __future__ import annotations
@@ -43,7 +43,8 @@ from pyspark.sql import functions as F
 from spark_frontier.frontier.priority import build_candidates
 from spark_frontier.frontier.recency import filter_recent
 from spark_frontier.fetch.fetcher import hermetic_fetch
-from spark_frontier.functions.bloom import build_bloom_segments, dedup_unseen
+from spark_frontier.functions.bloom import dedup_unseen
+from spark_frontier.functions.seen_filter import SEGMENTS, SeenFilter
 from spark_frontier.payload.validate import validate_fetched
 from spark_frontier.politeness.backoff import (
     blocked_hosts,
@@ -143,6 +144,13 @@ def first_per_key(candidates: DataFrame) -> DataFrame:
     full per-partition sort of the candidate rows after the exchange
     (~25% of the job on the bench world, where duplicates are rare).
     Exactness is pinned by test_first_per_key_matches_window.
+
+    CONSTRAINT: every candidates column rides the struct, so every
+    column must be ORDERABLE — a map-typed (or otherwise unorderable)
+    column added to the candidate schema fails here with an
+    AnalysisException, where the window only ordered by the four
+    priority columns. And if the order prefix ever tied, the payload
+    fields (nulls first) would pick the winner.
     """
     cols = candidates.columns
     order = ["site_seq", "depth", "path", "sitemap_pos"]
@@ -153,6 +161,18 @@ def first_per_key(candidates: DataFrame) -> DataFrame:
         .select("url_key", "_w.*")
         .select(*cols)
     )
+
+
+def _obs_n(obs: Observation, key: str = "n") -> int:
+    """An observed count. A runtime-empty input lets AQE's empty-relation
+    propagation prune the CollectMetrics node out of the executed plan,
+    so the Observation never fires and .get raises — which happens
+    exactly when the metric is 0 (first seen on a fully-seen world: zero
+    unseen URLs)."""
+    try:
+        return int(obs.get[key] or 0)
+    except Exception:
+        return 0
 
 
 def fetch_and_validate(
@@ -255,18 +275,20 @@ def run_crawl_cycle(
     max_per_host: int = 64,
     max_waves: int = 100,
     use_bloom: bool = True,
-    bloom_segments: int = 16,
     stop_after_wave: int | None = None,
     salt_buckets: int = 4,
-    collect_metrics: bool = True,
-    fuse_discovery: bool = False,
     bloom_probe: str = "broadcast",
     seen_filter: str = "bloom",
     process_within_days: int | None = None,
     report: CycleReport | None = None,
 ) -> CycleReport:
     """Run one crawl cycle to frontier exhaustion (or stop_after_wave, for
-    the resume test). Returns funnel counters.
+    the resume test). Returns funnel counters; every counter, the
+    per-site crawl-log rows included, is always collected (the discovery
+    counters ride Observations on the candidates materialize job).
+
+    ``use_bloom``: front the exact seen anti-join with the persisted
+    seen filter (``functions/seen_filter.py``, ``SEGMENTS`` segments).
 
     ``bloom_probe``: 'broadcast' (default; right while total bitmap size
     fits executor memory) or 'distributed' (cogroup probe, no driver
@@ -275,8 +297,8 @@ def run_crawl_cycle(
     ``seen_filter``: 'bloom' (default) or 'cuckoo' — same
     negative-pass-through topology, but the cuckoo variant supports
     DELETE, so ``retention_cleanup`` removes expired keys in place
-    instead of rebuilding from the full links table (broadcast probe
-    only; exactness is identical — the probe never decides, the exact
+    instead of the next cycle rebuilding from the full links table
+    (exactness is identical — the probe never decides, the exact
     anti-join does).
 
     ``process_within_days``: the reference's run-once quirk
@@ -308,9 +330,8 @@ def run_crawl_cycle(
     try:
         return _run_cycle_inner(
             spark, world, store, batch_ts, days, max_per_host, max_waves,
-            use_bloom, bloom_segments, stop_after_wave, salt_buckets,
-            collect_metrics, fuse_discovery, bloom_probe, seen_filter,
-            process_within_days, report, _tr,
+            use_bloom, stop_after_wave, salt_buckets, bloom_probe,
+            seen_filter, process_within_days, report, _tr,
         )
     finally:
         jmap = spark.sparkContext._jsc.getPersistentRDDs()
@@ -321,27 +342,17 @@ def run_crawl_cycle(
 
 def _run_cycle_inner(
     spark, world, store, batch_ts, days, max_per_host, max_waves, use_bloom,
-    bloom_segments, stop_after_wave, salt_buckets, collect_metrics,
-    fuse_discovery, bloom_probe, seen_filter, process_within_days, report,
-    _tr,
+    stop_after_wave, salt_buckets, bloom_probe, seen_filter,
+    process_within_days, report, _tr,
 ) -> CycleReport:
     if seen_filter not in ("bloom", "cuckoo"):
         raise ValueError(f"unknown seen_filter: {seen_filter!r}")
-    # layout-specific cogroup prober for the distributed probe path (the
-    # 10^10-key shape: the cuckoo table at ~2.5 B/key with headroom is
-    # tens of GB — it must never ship whole to every executor)
-    if seen_filter == "cuckoo":
-        from spark_frontier.functions.cuckoo import (
-            probe_distributed as distributed_prober,
-        )
-    else:
-        distributed_prober = None  # dedup_unseen defaults to the bloom's
     sites = world["sites"].filter(F.col("is_active")).orderBy("site_seq")
     seeds = sites.select("site_id", "site_seq", "sitemap_url")
 
     links_tbl = store.table("links")
     host_tbl = store.table("host_state")
-    bloom_tbl = store.table("bloom" if seen_filter == "bloom" else "cuckoo")
+    seen_f = SeenFilter(store.table(seen_filter), links_tbl, seen_filter)
     logs_tbl = store.table("crawl_logs")
 
     # Async state-commit lanes: links / host_state / bloom /
@@ -389,7 +400,7 @@ def _run_cycle_inner(
         pending.append(fut)
         return fut
 
-    # Cycle-init state (seen read, bloom provenance check/agg/rebuild,
+    # Cycle-init state (seen read, seen-filter catch-up or rebuild,
     # host-state read) is INDEPENDENT of sitemap discovery, so it runs on
     # a pool thread in the "init" FAIR scheduler pool: its small jobs
     # interleave with the expand stages instead of serializing ~1-3 s of
@@ -397,223 +408,23 @@ def _run_cycle_inner(
     def _init_state():
         # SNAPSHOT-ISOLATED seen set: read ONCE at cycle start (the
         # SnapTable file list is immutable per snapshot). In-cycle
-        # additions are covered by the `attempted` set, so the bloom built
-        # here stays valid for the whole cycle — waves never touch it.
-        #
-        # EXACTNESS INVARIANT: a bloom miss bypasses the exact anti-join,
-        # so the bloom must be a SUPERSET of the seen set it fronts.
-        # Enforced by provenance, not commit ordering: every bloom commit
-        # records the links snapshot id it covers (``covers_links``); at
-        # cycle start a bloom whose covers_links ≠ the current links HEAD
-        # (crash before the bloom commit, retention delete, ...) is
-        # rebuilt from the full seen set. Extra bloom keys are harmless
-        # (extra anti-join probes only).
+        # additions are covered by the `attempted` set, so the filter
+        # made current here stays valid for the whole cycle — waves
+        # never touch it. Its commit rides the links lane.
         spark.sparkContext.setLocalProperty("spark.scheduler.pool", "init")
         try:
             links_snapshot = links_tbl.snapshot_id
             seen = links_tbl.read(spark)
-            segments = None
-            bloom_m_bits = None
-            seen_count = None  # known exactly when the bloom path runs
+            filt = None
             if seen is None:
                 seen = spark.createDataFrame([], "url_key long")
-                seen_count = 0
-            elif use_bloom and seen_filter == "cuckoo":
-                # cuckoo variant: same provenance discipline as the bloom
-                # (covers_links + modulus), but capacity lives in the
-                # filter itself (insert raises when full) so there is no
-                # m_bits agg; n_keys rides the summary for the
-                # broadcast-seen gate
-                segments = bloom_tbl.read(spark)
-                if segments is not None:
-                    _cmeta = bloom_tbl.summary()
-                    _cap = (int(_cmeta.get("n_buckets") or 0) * 4
-                            * bloom_segments)
-                    _ccovers = _cmeta.get("covers_links")
-                    _ckeys = int(_cmeta.get("n_keys") or 0)
-                    if (_cmeta.get("n_segments") != bloom_segments
-                            # outgrown (insert would overflow) → rebuild
-                            # bigger, the bloom's capacity-check analogue
-                            or _ckeys > 0.8 * _cap):
-                        segments = None
-                    elif _ccovers != links_snapshot:
-                        # round-5 catch-up (see the bloom branch): fold
-                        # the links delta in-place on the init thread —
-                        # the cuckoo's incremental insert — instead of a
-                        # cycle-end delta commit in the tail
-                        delta_df = None
-                        if _ccovers:
-                            try:
-                                delta_df = links_tbl.read_changes(
-                                    spark, _ccovers
-                                )
-                            except ValueError:
-                                segments = None
-                        else:
-                            segments = None
-                        if segments is not None and delta_df is not None:
-                            from spark_frontier.functions.cuckoo import (
-                                insert_cuckoo_keys,
-                            )
-
-                            nk = materialize(delta_df.select("url_key"))
-                            n_total = _ckeys + nk.count()
-                            if n_total > 0.8 * _cap:
-                                segments = None  # would overflow
-                            else:
-                                try:
-                                    segments = materialize(
-                                        insert_cuckoo_keys(
-                                            segments, nk,
-                                            n_segments=bloom_segments,
-                                        )
-                                    )
-                                except Exception:
-                                    segments = None  # full → rebuild
-                                else:
-                                    seen_count = n_total
-                                    _async(
-                                        bloom_tbl.overwrite, segments,
-                                        summary={
-                                            "op": "cuckoo_catchup",
-                                            "covers_links": links_snapshot,
-                                            "n_segments": bloom_segments,
-                                            "n_buckets": _cmeta.get(
-                                                "n_buckets"),
-                                            "n_keys": n_total,
-                                        },
-                                        small=True, _lane="links",
-                                    )
-                        elif segments is not None:
-                            seen_count = _ckeys
-                    else:
-                        seen_count = _ckeys
-                if segments is None:
-                    import math as _math
-
-                    from spark_frontier.functions.cuckoo import (
-                        build_cuckoo_segments,
-                    )
-
-                    n_seen = seen.count()
-                    seen_count = n_seen
-                    # floor + 2× growth headroom at load 0.7: a fresh
-                    # store's filter must absorb whole cycles of inserts
-                    # before the capacity check forces a resize
-                    per_seg = max(
-                        2 * n_seen / (bloom_segments * 4 * 0.7), 1
-                    )
-                    nb = max(1024, 1 << _math.ceil(_math.log2(per_seg)))
-                    segments = build_cuckoo_segments(
-                        seen.select("url_key"), n_segments=bloom_segments,
-                        n_buckets=nb,
-                    ).transform(materialize)
-                    _async(
-                        bloom_tbl.overwrite, segments,
-                        summary={"op": "cuckoo_build",
-                                 "covers_links": links_snapshot,
-                                 "n_segments": bloom_segments,
-                                 "n_buckets": nb,
-                                 "n_keys": n_seen},
-                        small=True, _lane="links",
-                    )
             elif use_bloom:
-                segments = bloom_tbl.read(spark)
-                if segments is not None:
-                    _bmeta = bloom_tbl.summary()
-                    _covers = _bmeta.get("covers_links")
-                    _mb_meta = _bmeta.get("m_bits")
-                    if _bmeta.get("n_segments") != bloom_segments:
-                        # built under a different — or UNRECORDED
-                        # (legacy snapshot: assuming it used the current
-                        # modulus would probe the wrong bitmap → false
-                        # negatives) — segment modulus → full rebuild
-                        segments = None
-                    elif _covers != links_snapshot:
-                        # CATCH-UP (round 5): cycles no longer commit an
-                        # end-of-cycle bloom delta — it was the entire
-                        # commit tail (~4 s at 8 cores, pure serial
-                        # drain). The NEXT cycle folds the links delta
-                        # in HERE instead, on the init thread, hidden
-                        # behind sitemap discovery. Requires the
-                        # recorded snapshot to be an ancestor readable
-                        # incrementally; a rewrite in the range
-                        # (retention) or missing provenance/m_bits falls
-                        # back to the full rebuild below — the existing
-                        # self-healing discipline.
-                        delta_df = None
-                        if _covers and _mb_meta:
-                            try:
-                                delta_df = links_tbl.read_changes(
-                                    spark, _covers
-                                )
-                            except ValueError:
-                                segments = None
-                        else:
-                            segments = None
-                        if segments is not None and delta_df is not None:
-                            from spark_frontier.functions.bloom import (
-                                merge_bloom_segments,
-                            )
-
-                            dseg = build_bloom_segments(
-                                delta_df.select("url_key"),
-                                n_segments=bloom_segments,
-                                m_bits=int(_mb_meta),
-                            )
-                            segments = materialize(
-                                merge_bloom_segments(segments, dseg)
-                            )
-                            _async(
-                                bloom_tbl.overwrite, segments,
-                                summary={"op": "bloom_catchup",
-                                         "covers_links": links_snapshot,
-                                         "n_segments": bloom_segments,
-                                         "m_bits": int(_mb_meta)},
-                                small=True, _lane="links",
-                            )
-                    if segments is not None:
-                        # ONE agg job: capacity check + the m_bits the
-                        # probe needs (a second agg per cycle is pure
-                        # serial tail); runs on the caught-up segments,
-                        # so an outgrown filter still rebuilds bigger
-                        cap = segments.agg(
-                            F.sum("m_bits").alias("mb"),
-                            F.sum("n_items").alias("n"),
-                            F.count_distinct("m_bits").alias("sizes"),
-                            F.max("m_bits").alias("mx"),
-                        ).collect()[0]
-                        if ((cap["n"] and cap["n"] * 14 > cap["mb"])
-                                or cap["sizes"] != 1):
-                            segments = None  # outgrown/non-uniform
-                        else:
-                            bloom_m_bits = cap["mx"]
-                            seen_count = int(cap["n"] or 0)
-                if segments is None:
-                    # UNIFORM m_bits across segments (2× headroom over the
-                    # current seen count) so end-of-cycle delta segments
-                    # can be OR-merged
-                    import math as _math
-
-                    n_seen = seen.count()
-                    seen_count = n_seen
-                    per_seg = max(n_seen // bloom_segments, 1)
-                    uniform_bits = max(
-                        64, 1 << _math.ceil(_math.log2(per_seg * 14 * 2))
-                    )
-                    segments = build_bloom_segments(
-                        seen.select("url_key"), n_segments=bloom_segments,
-                        m_bits=uniform_bits,
-                    ).transform(materialize)
-                    _async(
-                        bloom_tbl.overwrite, segments,
-                        summary={"op": "bloom_build",
-                                 "covers_links": links_snapshot,
-                                 "n_segments": bloom_segments,
-                                 "m_bits": uniform_bits},
-                        small=True, _lane="links",
-                    )
-                    bloom_m_bits = uniform_bits  # known by construction
+                filt = seen_f.refresh(
+                    spark, at=links_snapshot, seen=seen,
+                    commit=lambda segs, summary: _async(
+                        seen_f.table.overwrite, segs, summary=summary,
+                        small=True, _lane="links"),
+                )
 
             # host state: read once, then carried IN MEMORY between waves
             # (the table write is resume state only → async)
@@ -625,8 +436,8 @@ def _run_cycle_inner(
             # (lineage files + batch_ts) instead of running as the last
             # job of its commit tail — at cycle end there is no compute
             # left to hide the groupBy-host job behind, but HERE it
-            # overlaps sitemap discovery. Same discipline as the bloom
-            # catch-up above. Unreadable fold files (retention) fall
+            # overlaps sitemap discovery. Same discipline as the seen
+            # filter catch-up above. Unreadable fold files (retention) fall
             # back to the stale base, which only ever over-throttles —
             # the documented crash-resume semantics.
             _pend = host_tbl.summary().get("pending_fold")
@@ -652,28 +463,12 @@ def _run_cycle_inner(
             # discovery (the limit-collect on an empty/small table still
             # costs 2-3 scale-up jobs of driver latency on the wave path)
             hs_rows0 = hs.limit(_HS_LITERAL_CAP + 1).collect()
-            # prebuild the broadcast bloom probe (bitmap collect +
+            # prebuild the broadcast probe (segment collect +
             # sc.broadcast serialization) off the wave critical path too
             probe_fn = None
-            if segments is not None and bloom_probe == "broadcast":
-                if seen_filter == "cuckoo":
-                    from spark_frontier.functions.cuckoo import (
-                        cuckoo_contains_udf,
-                    )
-
-                    probe_fn = cuckoo_contains_udf(
-                        spark, segments, bloom_segments
-                    )
-                else:
-                    from spark_frontier.functions.bloom import (
-                        might_contain_udf,
-                    )
-
-                    probe_fn = might_contain_udf(
-                        spark, segments, bloom_segments
-                    )
-            return (seen, segments, bloom_m_bits, hs, seen_count, hs_rows0,
-                    probe_fn)
+            if filt is not None and bloom_probe == "broadcast":
+                probe_fn = seen_f.probe_udf(spark, filt.segments)
+            return seen, filt, hs, hs_rows0, probe_fn
         finally:
             spark.sparkContext.setLocalProperty("spark.scheduler.pool", None)
 
@@ -686,9 +481,16 @@ def _run_cycle_inner(
     try:
 
         # --- discovery: sitemap BFS + recency + candidate build -------------
-        # expand already localCheckpoints each BFS level; counts on the
-        # checkpointed levels are near-free.
-        entries = expand_sitemap_tree(seeds, world["sitemap_pages"])
+        # expand localCheckpoints each BFS level. The discovery funnel
+        # counters (entries, robots-denied, within-days) are Observations
+        # on the ONE candidates materialize job below — no count jobs.
+        # filter_recent reads `entries` in several branches; each copy of
+        # the observe node sees every entry row (no filter sits below
+        # it), so whichever copy reports, the count is the total.
+        obs_entries = Observation("entries_n")
+        entries = expand_sitemap_tree(seeds, world["sitemap_pages"]).observe(
+            obs_entries, F.count(F.lit(1)).alias("n")
+        )
         _tr("expand")
 
         recent = filter_recent(entries, sites, days=days, now=batch_ts)
@@ -709,8 +511,12 @@ def _run_cycle_inner(
         else:
             rules = build_rules_df(spark, [])
             n_robots_hosts = 0
+        obs_robots = Observation("robots_denied_n")
         with_robots = robots_allowed(
             build_candidates(recent), rules, n_hosts=n_robots_hosts
+        ).observe(
+            obs_robots,
+            F.sum(F.when(F.col("robots_allowed"), 0).otherwise(1)).alias("n"),
         )
         candidates = with_robots.filter(F.col("robots_allowed"))
 
@@ -731,27 +537,13 @@ def _run_cycle_inner(
             candidates = candidates.filter(
                 F.col("lastmod").isNull() | dd.between(0, process_within_days)
             )
-        if fuse_discovery:
-            # single-wave drain mode (bench): keep discovery LAZY so canonical-
-            # ize/robots/recency fuse into the wave job — one pipeline, no
-            # materialization barrier. Wave ≥ 2 checkpoints on entry instead.
-            candidates_ckpt = False
-        else:
-            # fuse the within-days count into the materialize job itself
-            # (Observation) instead of a separate count job — one fewer
-            # serial job + driver gap per cycle (pure serial tail at any
-            # core count)
-            obs_cand = Observation("candidates_n")
-            candidates = candidates.observe(
-                obs_cand, F.count(F.lit(1)).alias("n")
-            ).transform(materialize)
-            candidates_ckpt = True
-            report.entries_within_days = int(obs_cand.get["n"] or 0)
-        if collect_metrics:
-            report.sitemap_entries_total = entries.count()
-            report.robots_denied = with_robots.filter(
-                ~F.col("robots_allowed")
-            ).count()
+        obs_cand = Observation("candidates_n")
+        candidates = candidates.observe(
+            obs_cand, F.count(F.lit(1)).alias("n")
+        ).transform(materialize)
+        report.sitemap_entries_total = _obs_n(obs_entries)
+        report.robots_denied = _obs_n(obs_robots)
+        report.entries_within_days = _obs_n(obs_cand)
 
         def _site_log_rows(df: DataFrame, crawl_type: str, ts) -> DataFrame:
             """K3 per-site per-phase crawl-log rows (repository.py:473-498;
@@ -769,8 +561,7 @@ def _run_cycle_inner(
             )
 
 
-        (seen, segments, bloom_m_bits, hs, seen_count, hs_rows,
-         probe_fn) = fut_state.result()
+        seen, filt, hs, hs_rows, probe_fn = fut_state.result()
         _tr("state_init")
 
         # In-cycle attempted set: the reference iterates its new-URL list ONCE
@@ -790,9 +581,6 @@ def _run_cycle_inner(
         wave = 0
         while wave < max_waves:
             wave += 1
-            if wave == 2 and not candidates_ckpt:
-                candidates = candidates.transform(materialize)
-                candidates_ckpt = True
             if hs_next is not None:
                 hs = hs_next.transform(materialize)
                 hs_next = None
@@ -808,10 +596,12 @@ def _run_cycle_inner(
                 hs_rows = hs.limit(_HS_LITERAL_CAP + 1).collect()
             hs_literal = len(hs_rows) <= _HS_LITERAL_CAP
             unseen = dedup_unseen(
-                candidates, seen.select("url_key"), segments=segments,
-                n_segments=bloom_segments, probe=bloom_probe,
-                seen_count=seen_count, probe_fn=probe_fn,
-                distributed_prober=distributed_prober,
+                candidates, seen.select("url_key"),
+                segments=filt.segments if filt else None,
+                n_segments=SEGMENTS, probe=bloom_probe,
+                seen_count=filt.n_keys if filt else None,
+                probe_fn=probe_fn,
+                distributed_prober=seen_f.distributed_prober,
             )
             if attempted is not None:
                 unseen = unseen.join(attempted, on="url_key", how="left_anti")
@@ -850,11 +640,6 @@ def _run_cycle_inner(
             rows_obs = build_link_rows(
                 rows_obs, batch_ts, sites=world["sites"],
                 keep=["politeness_deadline"],
-                # (with_category's dedup_content mode was also tried here:
-                # its distinct-text broadcast side recomputes the whole
-                # un-checkpointed wave upstream as a SERIAL pre-job —
-                # measured ~5 s to save ~1.4 s at 32 cores. The fused
-                # Arrow kernel keeps the dedup per-batch instead.)
             ).observe(
                 obs_v,
                 F.count(F.lit(1)).alias("n"),
@@ -878,17 +663,6 @@ def _run_cycle_inner(
                 summary={"op": "fetch_lineage", "wave": wave},
             )
             _tr(f"wave{wave}_materialize")
-
-            def _obs_n(obs, key):
-                # a runtime-empty frontier lets AQE's empty-relation
-                # propagation prune the CollectMetrics node out of the
-                # executed plan, so the Observation never fires and .get
-                # raises — which happens exactly when the metric is 0
-                # (first seen on a fully-seen world: zero unseen URLs)
-                try:
-                    return int(obs.get[key] or 0)
-                except Exception:
-                    return 0
 
             n_wave = _obs_n(obs_v, "n")
             n_unseen = _obs_n(obs_unseen, "n")
@@ -938,8 +712,7 @@ def _run_cycle_inner(
             )
             _tr(f"wave{wave}_links_append")
 
-            if collect_metrics:
-                wave_site_slices.append(rows_full.select("site_id", "is_valid"))
+            wave_site_slices.append(rows_full.select("site_id", "is_valid"))
 
             # host-state fold: LAZY — materialized only if a next wave
             # runs (loop top); the FINAL wave's fold never runs in this
@@ -1013,7 +786,7 @@ def _run_cycle_inner(
                        small=True, _lane="host_state")
 
         # --- per-site per-phase crawl logs (K3 parity) --------------------
-        if collect_metrics and wave_site_slices:
+        if wave_site_slices:
             from functools import reduce as _reduce
 
             per_site = _reduce(
@@ -1107,86 +880,42 @@ def _run_cycle_inner(
 def retention_cleanup(store: SnapStore, spark: SparkSession,
                       now: datetime, ttl_days: int = 2) -> None:
     """T10 (repository.py:432-450): TTL the seen store. Reference quirk
-    preserved: expired URLs become re-crawlable."""
+    preserved: expired URLs become re-crawlable.
+
+    The delete rewrites links, so no seen filter can be caught up across
+    it: the next cycle rebuilds a bloom from the surviving rows. A cuckoo
+    is kept instead — its expired keys are DELETED in place,
+    O(expired + uncovered delta) rather than an O(seen) rebuild."""
     links = store.table("links")
     if links.exists():
         cutoff = (f"first_seen_at < timestamp'{now.isoformat(sep=' ')}' "
                   f"- INTERVAL {ttl_days} DAYS")
-        cuckoo = store.table("cuckoo")
-        expired = None
-        catchup = None
-        meta = {}
-        if cuckoo.exists():
-            # Since round 5 the filter may lag links (cycle-end delta
-            # commits moved to next-cycle init catch-up), and deleting a
-            # key that was never INSERTED can evict a colliding key's
-            # fingerprint — a false negative. So: fold the uncovered
-            # links delta in FIRST (the cuckoo's incremental insert),
-            # then delete. Both input sets are captured BEFORE the
-            # delete_where rewrite. If the delta isn't incrementally
-            # readable, skip the in-place path — the rewrite invalidates
-            # provenance and the next cycle rebuilds from scratch.
-            meta = cuckoo.summary()
-            in_place = True
-            if meta.get("covers_links") != links.snapshot_id:
-                try:
-                    catchup = links.read_changes(
-                        spark, meta.get("covers_links")
-                    ) if meta.get("covers_links") else None
-                    if catchup is not None:
-                        catchup = materialize(catchup.select("url_key"))
-                    in_place = catchup is not None
-                except ValueError:
-                    in_place = False
-            if in_place:
-                # capture the keys BEFORE the delete rewrites the table —
-                # they are exactly what leaves the cuckoo filter
-                expired = materialize(
-                    links.read(spark).filter(cutoff).select("url_key")
-                )
+        # Deleting a key that was never INSERTED can evict a colliding
+        # key's fingerprint — a false negative — so the cuckoo is first
+        # caught up to the links head. It and the expired keys are both
+        # materialized BEFORE the delete_where rewrite; a cuckoo that
+        # can't be caught up is left for the next cycle to rebuild.
+        cuckoo = SeenFilter(store.table("cuckoo"), links, "cuckoo")
+        state = cuckoo.catch_up(spark, links.snapshot_id)
+        if state is not None:
+            expired = materialize(
+                links.read(spark).filter(cutoff).select("url_key")
+            )
         links.delete_where(
             cutoff,
             spark,
             summary={"op": "retention", "ttl_days": ttl_days},
         )
-        if expired is not None:
-            # the cuckoo's whole point: expired keys DELETE in place —
-            # O(expired + uncovered delta), not the bloom's O(seen)
-            # rebuild scan
-            from spark_frontier.functions.cuckoo import (
-                delete_cuckoo_keys,
-                insert_cuckoo_keys,
-            )
+        if state is not None:
+            from spark_frontier.functions.cuckoo import delete_cuckoo_keys
 
-            n_seg = int(meta.get("n_segments") or 16)
-            n_exp = expired.count()
-            n_keys = int(meta.get("n_keys") or 0)
-            segs = cuckoo.read(spark)
-            if catchup is not None:
-                segs = insert_cuckoo_keys(segs, catchup, n_segments=n_seg)
-                n_keys += catchup.count()
-            cuckoo.overwrite(
-                materialize(delete_cuckoo_keys(
-                    segs, expired, n_segments=n_seg
-                )),
-                summary={"op": "cuckoo_delete_after_retention",
-                         "n_segments": n_seg,
-                         "n_buckets": meta.get("n_buckets"),
-                         "n_keys": max(n_keys - n_exp, 0),
-                         "covers_links": links.snapshot_id},
-                small=True,
-            )
-        # seen-set changed → a bloom (no delete support) must be rebuilt
-        bloom = store.table("bloom")
-        if bloom.exists():
-            bloom.overwrite(
-                build_bloom_segments(
-                    links.read(spark).select("url_key"), n_segments=16
-                ),
-                summary={"op": "bloom_rebuild_after_retention",
-                         "n_segments": 16,
-                         "covers_links": links.snapshot_id},
-            )
+            state.segments = materialize(delete_cuckoo_keys(
+                state.segments, expired, n_segments=SEGMENTS
+            ))
+            state.n_keys = max(state.n_keys - expired.count(), 0)
+            state.op = "cuckoo_delete_after_retention"
+            cuckoo.commit_small(state.segments,
+                                cuckoo.summary(state, links.snapshot_id))
     # append-heavy log tables accumulate one file set per commit; the
     # 24 h maintenance pass bin-packs them (links is rewritten by the
     # delete_where above, so it is already compact)

@@ -16,14 +16,14 @@ fingerprint set (now containing its own earlier commit) and the
 anti-join drops the replayed rows: idempotent.
 
 Bloom short-circuit (the crawl stream's topology, fingerprint-keyed):
-a ``corpus_bloom`` segments table keyed on xxhash64(fingerprint) rides
-snapshot provenance (``covers`` = the corpus_docs head it was built
-against). When valid, the probe drops the definitely-unseen slice
-before the anti-join, and the EXACT join — on the full 128-bit
-fingerprint string, so bloom-key collisions can only cost a probe,
-never a dropped document — sees only the maybe-seen rows. A stale or
-missing bloom is skipped, never trusted, and rebuilt on a background
-single-worker lane so maintenance cannot stall the next micro-batch.
+a ``corpus_bloom`` seen filter (``functions/seen_filter.py``) keyed on
+xxhash64(fingerprint) rides snapshot provenance (``covers`` = the
+corpus_docs head it covers). When current, the probe drops the
+definitely-unseen slice before the anti-join, and the EXACT join — on
+the full 128-bit fingerprint string, so bloom-key collisions can only
+cost a probe, never a dropped document — sees only the maybe-seen rows.
+A stale or missing bloom is skipped, never trusted, and caught up or
+rebuilt after the append.
 
 The heavy set-based stages (MinHash clusters, SemDeDup, packing) stay
 batch jobs over the accumulated table — dedup across the WHOLE corpus
@@ -37,10 +37,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from spark_frontier.functions.seen_filter import SeenFilter
 from spark_frontier.storage import SnapStore
 from spark_frontier.storage.materialize import materialize
 
 DOC_SCHEMA = "doc_id long, text string, source string"
+
+
+def _fingerprint_keys(docs: DataFrame) -> DataFrame:
+    return docs.select(F.xxhash64("fingerprint").alias("url_key"))
 
 
 def start_corpus_stream(
@@ -59,7 +64,6 @@ def start_corpus_stream(
     processing_time: str | None = None,
     max_files_per_trigger: int | None = None,
     use_bloom: bool = True,
-    bloom_segments: int = 16,
 ):
     """Start the streaming ingest; returns the StreamingQuery. With
     ``available_now`` (default) it drains the existing files and stops —
@@ -105,25 +109,16 @@ def start_corpus_stream(
 
         spark_b = batch_df.sparkSession
         tbl = store.table("corpus_docs")
-        bloom_tbl = store.table("corpus_bloom")
-        head_before = tbl.snapshot_id
+        seen_f = SeenFilter(store.table("corpus_bloom"), tbl,
+                            covers="covers", keys=_fingerprint_keys)
         committed = tbl.read(spark_b)
 
-        # bloom probe: only when provenance matches the CURRENT head —
-        # stale blooms are skipped (superset invariant), never trusted
-        segments = bloom_tbl.read(spark_b) if use_bloom else None
-        meta = bloom_tbl.summary() if segments is not None else {}
-        if segments is not None and (
-            meta.get("covers") != head_before or not meta.get("n_segments")
-        ):
-            segments = None
+        # bloom probe: only when it covers the CURRENT head — stale
+        # blooms are skipped (superset invariant), never trusted
+        segments = seen_f.current(spark_b) if use_bloom else None
         if committed is not None:
             if segments is not None:
-                from spark_frontier.functions.bloom import might_contain_udf
-
-                probe = might_contain_udf(
-                    spark_b, segments, int(meta["n_segments"])
-                )
+                probe = seen_f.probe_udf(spark_b, segments)
                 fresh = materialize(fresh)  # two consumers below
                 flagged = fresh.withColumn(
                     "_maybe", probe(F.col("url_key"))
@@ -146,76 +141,23 @@ def start_corpus_stream(
                     "anti",
                 )
         n_in = batch_df.count()
-        # one materialization barrier feeding BOTH the append and the
-        # bloom delta's key projection
-        fresh = materialize(fresh)
         tbl.append(
             fresh.drop("url_key"),
             summary={"op": "corpus_stream", "stream_batch_id": int(batch_id),
                      "n_batch_input": n_in},
         )
-        head_after = tbl.snapshot_id
 
         if use_bloom:
-            new_keys = fresh.select("url_key")
-            seg_in, meta_in = segments, meta
-
-            def _bloom_maintain():
-                from spark_frontier.functions.bloom import (
-                    build_bloom_segments,
-                    merge_bloom_segments,
-                )
-
-                if seg_in is not None:
-                    m_bits = int(
-                        meta_in.get("m_bits")
-                        or seg_in.agg(F.max("m_bits")).collect()[0][0]
-                    )
-                    merged = merge_bloom_segments(
-                        seg_in,
-                        build_bloom_segments(
-                            new_keys,
-                            n_segments=int(meta_in["n_segments"]),
-                            m_bits=m_bits,
-                        ),
-                    )
-                    n_seg_out, m_out = int(meta_in["n_segments"]), m_bits
-                else:
-                    # stale/missing: ONE scan of the post-append head
-                    import math
-
-                    all_docs = tbl.read(spark_b)
-                    if all_docs is None:
-                        return
-                    keys = all_docs.select(
-                        F.xxhash64("fingerprint").alias("url_key")
-                    )
-                    n_seen = keys.count()
-                    per_seg = max(n_seen // bloom_segments, 1)
-                    m_out = max(
-                        64, 1 << math.ceil(math.log2(per_seg * 14 * 2))
-                    )
-                    merged = build_bloom_segments(
-                        keys, n_segments=bloom_segments, m_bits=m_out
-                    )
-                    n_seg_out = bloom_segments
-                bloom_tbl.overwrite(
-                    merged,
-                    summary={"op": "corpus_bloom", "covers": head_after,
-                             "n_segments": n_seg_out, "m_bits": m_out},
-                    small=True,
-                )
-
             if available_now:
                 # drain/catch-up mode: run inline so the query's
                 # termination implies the bloom is current (tests and
                 # backfills read it immediately after)
-                _bloom_maintain()
+                seen_f.refresh(spark_b)
             else:
                 # live mode: background single-worker lane — a stale
                 # bloom only costs the next batch its probe, never a
                 # stall (the crawl stream's non-blocking rule)
-                bloom_pool.submit(_bloom_maintain)
+                bloom_pool.submit(seen_f.refresh, spark_b)
 
     writer = (
         stream.writeStream.foreachBatch(_ingest)

@@ -48,6 +48,7 @@ from pyspark.sql import functions as F
 from spark_frontier.frontier.priority import build_candidates
 from spark_frontier.frontier.recency import filter_recent
 from spark_frontier.functions.bloom import dedup_unseen
+from spark_frontier.functions.seen_filter import SEGMENTS, SeenFilter
 from spark_frontier.pipeline.crawl import (
     build_link_rows,
     fetch_and_validate,
@@ -144,13 +145,12 @@ def start_stream_crawl(
     visibility). Crash-replay may re-land one batch's results — a
     double-fold only ever OVER-throttles.
 
-    BLOOM maintenance is NON-BLOCKING: the merge/rebuild runs on a
-    single-worker background lane, so a stale bloom no longer stalls the
-    micro-batch (links commit first; a batch that arrives before the
-    bloom lands just skips the probe and pays the exact anti-join once).
-    Commits serialize in batch order; ``covers_links`` provenance is the
-    links head the delta actually covers, so an out-of-date commit is
-    rejected by readers and the next delta self-heals.
+    BLOOM maintenance is NON-BLOCKING: ``SeenFilter.refresh`` (the batch
+    cycle's catch-up or rebuild) runs on a single-worker background
+    lane, so a stale bloom never stalls the micro-batch (links commit
+    first; a batch that arrives before the bloom lands just skips the
+    probe and pays the exact anti-join once). Commits serialize in batch
+    order, and each records the links head it covers.
     """
     import os as _os
     from concurrent.futures import ThreadPoolExecutor
@@ -221,28 +221,15 @@ def start_stream_crawl(
         seen = links_tbl.read(spark)
         if seen is None:
             seen = spark.createDataFrame([], "url_key long")
-        # BLOOM PARITY with the batch cycle: probe committed segments when
-        # their provenance matches the links HEAD (a stale bloom is only
-        # skipped, never trusted — the superset invariant must hold);
-        # without it every micro-batch pays an O(seen) anti-join shuffle.
-        bloom_tbl = store.table("bloom")
-        links_prev_sid = links_tbl.snapshot_id  # head BEFORE this batch
-        segments = bloom_tbl.read(spark) if use_bloom else None
-        n_seg = 0
-        meta: dict = {}
-        if segments is not None:
-            meta = bloom_tbl.summary()
-            # the probe modulus MUST be the build modulus (a mismatch maps
-            # keys to the wrong bitmap → false negatives → duplicate leak),
-            # so it rides in the snapshot summary; no/old summary → skip
-            if (meta.get("covers_links") != links_prev_sid
-                    or not meta.get("n_segments")):
-                segments = None
-            else:
-                n_seg = int(meta["n_segments"])
+        # BLOOM PARITY with the batch cycle: probe the committed segments
+        # only when they cover the links HEAD (a stale bloom is skipped,
+        # never trusted); without it every micro-batch pays an O(seen)
+        # anti-join shuffle.
+        seen_f = SeenFilter(store.table("bloom"), links_tbl)
         unseen = dedup_unseen(
-            candidates, seen.select("url_key"), segments=segments,
-            n_segments=n_seg or 32,
+            candidates, seen.select("url_key"),
+            segments=seen_f.current(spark) if use_bloom else None,
+            n_segments=SEGMENTS,
         )
         host_tbl = store.table("host_state")
         from spark_frontier.politeness.backoff import read_host_state
@@ -272,7 +259,6 @@ def start_stream_crawl(
             summary={"op": "stream_batch", "batch_id": int(batch_id),
                      "rows": n},
         )
-        links_head = links_tbl.snapshot_id  # head this batch produced
 
         # --- host state: land results, let the stateful query fold them --
         # (rows_full is checkpointed, so this select re-reads memory, not
@@ -287,62 +273,9 @@ def start_stream_crawl(
         state_q.processAllAvailable()
 
         if use_bloom:
-            # NON-BLOCKING bloom maintenance: merge/rebuild runs on the
-            # background lane so a stale bloom never stalls this batch —
-            # the links append above is already durable. `segments` was
-            # validated against links_prev_sid; the delta covers exactly
-            # links_head.
-            new_keys = valid_rows.select("url_key")
-            seg_in, nseg_in = segments, n_seg
-            meta_in = meta if segments is not None else {}
-
-            def _bloom_maintain():
-                from spark_frontier.functions.bloom import (
-                    build_bloom_segments,
-                    merge_bloom_segments,
-                )
-
-                if seg_in is not None:
-                    # m_bits rides in the summary (one less agg job per
-                    # batch); legacy snapshots without it pay the agg once
-                    m_bits = int(
-                        meta_in.get("m_bits")
-                        or seg_in.agg(F.max("m_bits")).collect()[0][0]
-                    )
-                    merged = merge_bloom_segments(
-                        seg_in,
-                        build_bloom_segments(
-                            new_keys, n_segments=nseg_in, m_bits=m_bits
-                        ),
-                    )
-                    covers, out_seg = links_head, nseg_in
-                else:
-                    import math
-
-                    out_seg = 16
-                    # ONE links scan: checkpoint the key column, then both
-                    # the count (for sizing) and the build read memory
-                    covers = links_tbl.snapshot_id
-                    seen_now = links_tbl.read(spark)
-                    if seen_now is None:
-                        return
-                    keys_all = materialize(seen_now.select("url_key"))
-                    n_seen = keys_all.count()
-                    per_seg = max(n_seen // out_seg, 1)
-                    m_bits = max(
-                        64, 1 << math.ceil(math.log2(per_seg * 14 * 2))
-                    )
-                    merged = build_bloom_segments(
-                        keys_all, n_segments=out_seg, m_bits=m_bits
-                    )
-                bloom_tbl.overwrite(
-                    materialize(merged),
-                    summary={"op": "bloom_stream", "n_segments": out_seg,
-                             "m_bits": m_bits, "covers_links": covers},
-                    small=True,
-                )
-
-            bloom_futs.append(bloom_pool.submit(_bloom_maintain))
+            # NON-BLOCKING bloom maintenance: the links append above is
+            # already durable; the lane folds it into the bloom
+            bloom_futs.append(bloom_pool.submit(seen_f.refresh, spark))
         notify_cols = ["url", "url_key", "sport_category", "caption",
                        "published_at"]
         if on_saved_partition is not None:

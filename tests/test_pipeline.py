@@ -179,6 +179,33 @@ def test_retention_reopens_urls(spark, world, tmp_path_factory):
     assert flog.read(spark).count() == 3
 
 
+def test_retention_leaves_one_bloom_rebuild(spark, world, tmp_path_factory):
+    """Retention rewrites links, so the next cycle's provenance check
+    rebuilds the bloom once from the surviving rows, and the cycle after
+    that catches it up. No second full build, and nothing re-crawls."""
+    store = _fresh_store(tmp_path_factory)
+    seed_seen_store(store, world["url_seen"])
+    run_crawl_cycle(spark, world, store, batch_ts=NOW, days=7)
+    bloom = store.table("bloom")
+    n_hist = len(bloom.history())
+
+    retention_cleanup(store, spark, now=NOW, ttl_days=2)
+    n_after = store.table("links").read(spark).count()
+    run_crawl_cycle(spark, world, store, batch_ts=NOW, days=7)
+    n_readmit = store.table("links").read(spark).count()
+    assert n_readmit > n_after  # expired URLs re-admitted (T10 quirk)
+    run_crawl_cycle(spark, world, store, batch_ts=NOW, days=7)
+
+    ops = [h["summary"].get("op") for h in bloom.history()[n_hist:]]
+    assert ops == ["bloom_build", "bloom_catchup"]
+    assert bloom.summary()["covers_links"] in [
+        h["snapshot_id"] for h in store.table("links").history()
+    ]
+    links = store.table("links").read(spark)
+    assert links.count() == n_readmit
+    assert links.select("url_key").distinct().count() == n_readmit
+
+
 def test_categories_and_site_logs_and_head(spark, world, tmp_path_factory):
     """Round-2 additions: every saved link carries a non-null
     sport_category (V6-V9 wired); crawl_logs has per-site per-phase rows
