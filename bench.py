@@ -139,7 +139,6 @@ def _one_cycle(spark, world, cores: int,
     report = run_crawl_cycle(
         spark, world, store, batch_ts=NOW, days=7,
         max_per_host=10_000_000,  # drain in one politeness wave
-        use_bloom=True, salt_buckets=max(cores // 2, 4),
     )
     t1 = time.time()
     return t1 - t0, report, store_dir, (t0, t1)

@@ -28,8 +28,6 @@ def main() -> int:
     p.add_argument("--store", required=True, help="SnapStore warehouse root")
     p.add_argument("--days", type=int, default=7)
     p.add_argument("--max-per-host", type=int, default=64)
-    p.add_argument("--salt-buckets", type=int, default=8)
-    p.add_argument("--no-bloom", action="store_true")
     p.add_argument("--dry-run", action="store_true")
     p.add_argument("--run-once", action="store_true",
                    help="reference cli.py run-once: discover 7 d but only "
@@ -164,8 +162,7 @@ def main() -> int:
 
     report = run_crawl_cycle(
         spark, world, store, batch_ts=batch_ts, days=args.days,
-        max_per_host=args.max_per_host, use_bloom=not args.no_bloom,
-        salt_buckets=args.salt_buckets,
+        max_per_host=args.max_per_host,
         process_within_days=args.process_days if args.run_once else None,
     )
     if args.cleanup_ttl_days is not None:

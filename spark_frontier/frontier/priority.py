@@ -1,4 +1,4 @@
-"""Frontier candidate construction, priority, and hot-host salting.
+"""Frontier candidate construction and priority.
 
 The frontier's priority contract (SURVEY.md §3): selection order is
 ``(site_seq, depth, path, sitemap_pos)`` — sites in get_active_sites()
@@ -6,15 +6,6 @@ order, sitemaps in BFS order, entries in document order. That tuple IS the
 min-heap key; we never materialize a global row_number (it would
 single-partition the sort at 10^10 rows) — every consumer orders or
 windows by the tuple directly.
-
-SALTING (north_rule "salted repartitioning of hot hosts"): UDF-heavy
-stages (fetch/validate) are partitioned by host for politeness, but one
-hot host would pin a whole wave to one task. AQE splits skewed JOINS, not
-UDF stages, so we salt explicitly: partition key =
-``concat(host, '#', pmod(xxhash64(url), salt))`` where salt scales with
-the host's share of the wave. Politeness stays correct because deadlines
-were already assigned per-host BEFORE salting — the salt only spreads
-*execution*, not *scheduling*.
 """
 
 from __future__ import annotations
@@ -58,33 +49,3 @@ def build_candidates(entries: DataFrame) -> DataFrame:
         .withColumn("host", host_of(F.col("url")))
     )
 
-
-def salted_repartition(
-    df: DataFrame, salt_buckets: int, num_partitions: int | None = None
-) -> DataFrame:
-    """Spread each host's rows over ``salt_buckets`` partitions for
-    UDF-stage parallelism. Use AFTER deadlines are assigned."""
-    salt_key = F.concat_ws(
-        "#", F.col("host"), F.pmod(F.xxhash64(F.col("url")), F.lit(salt_buckets))
-    )
-    if num_partitions is None:
-        # tasks-per-core granularity: >1 gives the scheduler slack to
-        # rebalance around stragglers (host noise, skewed salt buckets) at
-        # the price of a small per-task python-worker cost; tunable because
-        # the right value is workload-dependent (SPARK_FRONTIER_TASKS_PER_CORE)
-        import os
-
-        t = int(os.environ.get("SPARK_FRONTIER_TASKS_PER_CORE", "1"))
-        sc = df.sparkSession.sparkContext
-        num_partitions = sc.defaultParallelism * max(t, 1)
-    return df.repartition(num_partitions, salt_key)
-
-
-def adaptive_salt_buckets(df: DataFrame, target_rows_per_task: int = 5000) -> int:
-    """Pick a salt width from the hottest host's share (north_rule: salt
-    scaled to host frontier share). One tiny agg job."""
-    top = (
-        df.groupBy("host").count().agg(F.max("count").alias("m")).collect()[0]["m"]
-        or 0
-    )
-    return max(1, int(top // target_rows_per_task) + 1)

@@ -4,16 +4,9 @@ North_rule: "a broadcast bloom/cuckoo URL-seen filter over
 canonicalized-and-hashed URLs". The filter is built DISTRIBUTED — the seen
 table is grouped by ``seg_id = pmod(url_key, n_segments)`` and each segment's
 bitmap is built by an Arrow ``applyInPandas`` batch (numpy bit ops, no
-per-row Python) — then either:
-
-- **broadcast probe** (default; the north_rule shape): segment bitmaps are
-  collected and broadcast, the frontier probes them in a vectorized pandas
-  UDF. Memory is bounded by ``bits_per_key * n_seen / 8`` bytes total; at
-  10^10 keys you shard the broadcast by running dedup per host-bucket wave
-  so only the active buckets' segments ship, or
-- **distributed probe**: frontier repartitioned on seg_id and joined to the
-  segment table, probing inside the cogroup — no single-node bitmap ever
-  materializes. Same topology, strictly shuffle-bound.
+per-row Python) — then the segment bitmaps are collected and broadcast,
+and the frontier probes them in a vectorized pandas UDF. Memory is bounded
+by ``bits_per_key * n_seen / 8`` bytes total.
 
 EXACTNESS (SURVEY.md §4.3): bloom false positives must never drop URLs, so
 the filter only short-circuits NEGATIVES: rows whose bits miss are
@@ -22,8 +15,9 @@ only *possibly* seen and still go through the exact anti-join. The union of
 both slices is exactly ``frontier ANTI JOIN seen`` — the bloom just shrinks
 the join's probe side (usually >95% of a fresh crawl batch is unseen-new).
 
-Bitmaps checkpoint to a SnapTable (Iceberg in production) so resume does
-not rebuild them: see ``pipeline/crawl.py``.
+Bitmaps persist to a SnapTable (Iceberg in production) with snapshot
+provenance, so a restarted stream does not rebuild them: see
+``functions/seen_filter.py``.
 """
 
 from __future__ import annotations
@@ -186,58 +180,7 @@ def might_contain_udf(spark, segments: DataFrame, n_segments: int):
     return might_contain
 
 
-def probe_distributed(
-    frontier: DataFrame,
-    segments: DataFrame,
-    key_col: str = "url_key",
-    n_segments: int = 32,
-) -> DataFrame:
-    """The 10^10-key probe path: NO driver collect, NO bitmap broadcast.
-
-    The frontier is repartitioned on ``seg_id`` and cogrouped with the
-    segment table, so each task holds exactly ONE segment's bitmap (a few
-    MB) while probing that segment's slice of the frontier. At the design
-    point of 10^10 keys × 14 bits ≈ 17.5 GB of bitmap total, the broadcast
-    path would ship all of it to every executor — here each executor only
-    ever materializes the segments it owns. Cost: one shuffle of the
-    frontier keyed on seg_id (bounded per wave by max_per_host).
-
-    Returns frontier + ``_maybe_seen`` boolean."""
-    from pyspark.sql.types import BooleanType as _B
-
-    fr = frontier.withColumn(
-        "_seg_id", F.pmod(F.col(key_col), F.lit(n_segments)).cast("int")
-    )
-    out_schema = StructType(
-        fr.schema.fields + [StructField("_maybe_seen", _B())]
-    )
-
-    def _probe(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if left.empty:
-            return left.assign(_maybe_seen=pd.Series([], dtype=bool))
-        if right.empty:
-            # no bitmap for this segment → nothing was ever seen there
-            return left.assign(_maybe_seen=False)
-        acc = np.frombuffer(right["bitmap"].iloc[0], dtype=np.uint8)
-        if len(right) > 1:  # defensive: OR any unmerged delta rows
-            acc = acc.copy()
-            for b in right["bitmap"].iloc[1:]:
-                acc |= np.frombuffer(b, dtype=np.uint8)
-        m_bits = int(right["m_bits"].iloc[0])
-        keys = left[key_col].to_numpy(dtype=np.int64)
-        return left.assign(_maybe_seen=_test_bits(acc, keys, m_bits))
-
-    flagged = (
-        fr.groupBy("_seg_id")
-        .cogroup(
-            segments.withColumnRenamed("seg_id", "_seg_id").groupBy("_seg_id")
-        )
-        .applyInPandas(_probe, out_schema)
-    )
-    return flagged.drop("_seg_id")
-
-
-# Above this many seen keys the broadcast probe stops force-broadcasting
+# Above this many seen keys the bloom path stops force-broadcasting
 # the exact-check side: 8 M × 8 B keys ≈ 64 MB raw (~2-3× that as a JVM
 # hash relation) — past the point where shipping it whole to every
 # executor per wave beats a shuffle of only the maybe-seen slice.
@@ -250,66 +193,34 @@ def dedup_unseen(
     key_col: str = "url_key",
     segments: DataFrame | None = None,
     n_segments: int = 32,
-    probe: str = "broadcast",
     seen_count: int | None = None,
     broadcast_seen_cap: int = BROADCAST_SEEN_CAP,
     probe_fn=None,
-    distributed_prober=None,
 ) -> DataFrame:
     """Return frontier rows NOT in seen — exactly — using the bloom to
     shrink the anti-join probe side (reference dedup: repository.py:352-369
-    batched IN-queries; here one anti-join).
+    batched IN-queries; here one anti-join). The bitmaps are collected to
+    the driver and probed via a broadcast.
 
-    ``probe='broadcast'`` collects the bitmaps to the driver and probes via
-    a broadcast (right when total bitmap size ≲ executor memory);
-    ``probe='distributed'`` cogroups frontier×segments on seg_id — no
-    driver collect, the 10^10-key path. Both feed the SAME
-    negative-pass-through topology, so exactness never depends on the probe.
-
-    ``seen_count`` (if the caller knows it — the crawl cycle reads it off
-    the bloom summary agg it already runs) gates the exact-side broadcast:
-    above ``broadcast_seen_cap`` keys the anti-join runs as a plain
-    shuffle join of only the maybe-seen slice instead of force-shipping
-    the whole seen key set to every executor (OOM cliff as links grows).
-
-    ``distributed_prober``: layout-specific cogroup probe for
-    ``probe='distributed'`` — ``(frontier, segments, key_col, n_segments)
-    -> frontier + _maybe_seen``. Defaults to this module's bloom-layout
-    ``probe_distributed``; pass ``cuckoo.probe_distributed`` for cuckoo
-    segment tables.
+    ``seen_count`` (if the caller knows it, e.g. from the filter's
+    committed ``n_keys``) gates the exact-side broadcast: above
+    ``broadcast_seen_cap`` keys the anti-join runs as a plain shuffle join
+    of only the maybe-seen slice instead of force-shipping the whole seen
+    key set to every executor (OOM cliff as links grows).
 
     With ``segments=None`` falls back to the plain exact anti-join.
     """
     if segments is None:
         return frontier.join(seen.select(key_col), on=key_col, how="left_anti")
 
-    if probe == "distributed":
-        # scale path: the frontier is already cogroup-shuffled on seg_id;
-        # keep the two-branch union so ONLY the maybe-seen slice (FPR +
-        # true dups) enters the exact anti-join's shuffle. Callers pair
-        # this with a materialized frontier, so the branches don't
-        # recompute the upstream.
-        prober = distributed_prober or probe_distributed
-        flagged = prober(frontier, segments, key_col, n_segments)
-        definitely_unseen = flagged.filter(~F.col("_maybe_seen")).drop(
-            "_maybe_seen"
-        )
-        needs_check = flagged.filter(F.col("_maybe_seen")).drop("_maybe_seen")
-        confirmed_unseen = needs_check.join(
-            seen.select(key_col), on=key_col, how="left_anti"
-        )
-        return definitely_unseen.unionByName(confirmed_unseen)
-
-    # broadcast probe: SINGLE-PASS negative-pass-through. A union of two
-    # filtered branches over a LAZY frontier physically duplicates the
-    # whole upstream (Catalyst does not common-subexpression two python-UDF
-    # subtrees, measured as twin ~35-core-s stages in the fused wave job);
-    # instead the probe verdict becomes a conditional join key — NULL for
+    # SINGLE-PASS negative-pass-through. A union of two filtered branches
+    # over a LAZY frontier physically duplicates the whole upstream
+    # (Catalyst does not common-subexpression two python-UDF subtrees,
+    # measured as twin ~35-core-s stages in the fused wave job); instead
+    # the probe verdict becomes a conditional join key — NULL for
     # definitely-unseen rows, which can never match, so they pass the
     # anti-join unconditionally while maybe-seen rows get the exact check.
-    # One consumer, zero recompute, same exact result. The seen side is
-    # explicitly broadcast: this mode is for seen sets that fit executor
-    # memory (the 10^10-key path is probe='distributed' above).
+    # One consumer, zero recompute, same exact result.
     # ``probe_fn``: a prebuilt might_contain_udf — callers on a hot path
     # build it once (bitmap collect + broadcast are driver-blocking jobs)
     # on a background thread instead of per dedup call

@@ -4,13 +4,14 @@ One cycle ≅ one reference ``run_global_crawl_cycle``
 (/root/reference/src/scheduler/crawl_scheduler.py:78-225):
 
     sites → sitemap BFS expansion → recency filter → candidate build
-    (canonicalize/hash/reject-filter) → URL-seen dedup (bloom + exact
-    anti-join) → blocked-host gate → robots gate → politeness deadlines →
-    wave selection → fetch (join) → payload validation → MERGE links,
-    MERGE host state, append crawl log, bump sites.last_crawl_at
+    (canonicalize/hash/reject-filter) → URL-seen dedup (exact anti-join
+    against links.url_key) → blocked-host gate → robots gate → politeness
+    deadlines → wave selection → fetch (join) → payload validation →
+    MERGE links, MERGE host state, append crawl log, bump
+    sites.last_crawl_at
 
 State lives in a SnapStore (Iceberg in production): ``links`` (the seen
-store + payload, reference article_links), ``host_state``, ``bloom``,
+store + payload, reference article_links), ``host_state``,
 ``crawl_logs``, ``sites``. Every commit carries funnel counters in its
 snapshot summary (diagnose_pipeline.py:38-53 parity), which is the
 north_rule's per-batch lineage.
@@ -18,18 +19,18 @@ north_rule's per-batch lineage.
 RESUMABILITY: a cycle processes the frontier in WAVES (max_per_host per
 host per wave). Every table commit rides an async lane keyed by table
 (strictly ordered within a table, concurrent across tables), and all
-lanes are fully drained before the cycle returns. The URL-seen filter
-(bloom, or cuckoo with ``seen_filter='cuckoo'``) has one lifecycle,
-``functions/seen_filter.py``: the NEXT cycle's init thread catches it up
-with the links delta (``bloom_catchup``/``cuckoo_catchup``, overlapped
-with discovery), or rebuilds it when its ``covers_links`` provenance
-can't be caught up (retention rewrote the range). A kill loses at most
-one uncommitted wave — its keys are still absent from links, so a
-resumed cycle re-crawls exactly that wave and the append stays
-duplicate-free; no crash ordering can leak a duplicate past the filter
-short-circuit, because a filter is trusted only for the links snapshot
-it records. ``test_resume_equals_uninterrupted`` kills after wave 1 and
-proves the final links table equals the uninterrupted run's.
+lanes are fully drained before the cycle returns. The URL-seen check is
+the links table itself: each wave anti-joins its candidates against the
+``url_key`` column of the links snapshot read at cycle start (Spark's
+planner broadcasts that key side while it fits
+``autoBroadcastJoinThreshold``), plus the keys this cycle already
+attempted. No derived filter is persisted, so nothing can lag links: a
+URL that retention's ``delete_where`` expired is simply absent and
+re-admitted. A kill loses at most one uncommitted wave — its keys are
+still absent from links, so a resumed cycle re-crawls exactly that wave
+and the append stays duplicate-free. ``test_resume_equals_uninterrupted``
+kills after wave 1 and proves the final links table equals the
+uninterrupted run's.
 """
 
 from __future__ import annotations
@@ -43,8 +44,6 @@ from pyspark.sql import functions as F
 from spark_frontier.frontier.priority import build_candidates
 from spark_frontier.frontier.recency import filter_recent
 from spark_frontier.fetch.fetcher import hermetic_fetch
-from spark_frontier.functions.bloom import dedup_unseen
-from spark_frontier.functions.seen_filter import SEGMENTS, SeenFilter
 from spark_frontier.payload.validate import validate_fetched
 from spark_frontier.politeness.backoff import (
     blocked_hosts,
@@ -179,7 +178,6 @@ def fetch_and_validate(
     wave_batch: DataFrame,
     world: dict[str, DataFrame],
     batch_ts: datetime,
-    salt_buckets: int = 4,
 ) -> DataFrame:
     """Fetch + late payload join + image/caption validation — the
     UDF-heavy tail shared by the batch cycle and the streaming path.
@@ -187,11 +185,8 @@ def fetch_and_validate(
     NO explicit salting here: the hermetic fetch is a shuffle_hash join on
     ``url``, whose hash partitioning spreads the join output (where the
     validate UDF runs) uniformly across all shuffle partitions — a prior
-    ``salted_repartition`` was a full extra shuffle of the widest rows
-    that the join immediately re-shuffled away (measured round 3). Salting
-    (``salted_repartition``) remains the skew tool for the LIVE path,
-    which partitions by host, not url. ``salt_buckets`` is kept for
-    API compatibility and ignored on the hermetic path.
+    salted repartition was a full extra shuffle of the widest rows that
+    the join immediately re-shuffled away (measured round 3).
 
     Ordering/priority columns (site_seq/depth/path/sitemap_pos) have done
     their job once the wave is selected — drop them before the join
@@ -277,8 +272,6 @@ def run_crawl_cycle(
     use_bloom: bool = True,
     stop_after_wave: int | None = None,
     salt_buckets: int = 4,
-    bloom_probe: str = "broadcast",
-    seen_filter: str = "bloom",
     process_within_days: int | None = None,
     report: CycleReport | None = None,
 ) -> CycleReport:
@@ -287,19 +280,15 @@ def run_crawl_cycle(
     per-site crawl-log rows included, is always collected (the discovery
     counters ride Observations on the candidates materialize job).
 
-    ``use_bloom``: front the exact seen anti-join with the persisted
-    seen filter (``functions/seen_filter.py``, ``SEGMENTS`` segments).
+    The URL-seen check is one exact anti-join per wave: candidates
+    ``LEFT ANTI JOIN`` the cycle-start links snapshot's ``url_key`` (and
+    the keys earlier waves attempted). Spark's planner picks the join
+    strategy from the key side's size estimate — a broadcast hash
+    anti-join while it fits ``autoBroadcastJoinThreshold``, a shuffle
+    join above it. No seen filter is built, caught up or committed.
 
-    ``bloom_probe``: 'broadcast' (default; right while total bitmap size
-    fits executor memory) or 'distributed' (cogroup probe, no driver
-    collect — the 10^10-key path).
-
-    ``seen_filter``: 'bloom' (default) or 'cuckoo' — same
-    negative-pass-through topology, but the cuckoo variant supports
-    DELETE, so ``retention_cleanup`` removes expired keys in place
-    instead of the next cycle rebuilding from the full links table
-    (exactness is identical — the probe never decides, the exact
-    anti-join does).
+    ``use_bloom`` and ``salt_buckets`` are accepted for callers that still
+    pass them and ignored.
 
     ``process_within_days``: the reference's run-once quirk
     (crawl_scheduler.py:367-372): DISCOVER with ``days`` (7) but re-filter
@@ -330,8 +319,7 @@ def run_crawl_cycle(
     try:
         return _run_cycle_inner(
             spark, world, store, batch_ts, days, max_per_host, max_waves,
-            use_bloom, stop_after_wave, salt_buckets, bloom_probe,
-            seen_filter, process_within_days, report, _tr,
+            stop_after_wave, process_within_days, report, _tr,
         )
     finally:
         jmap = spark.sparkContext._jsc.getPersistentRDDs()
@@ -341,22 +329,18 @@ def run_crawl_cycle(
 
 
 def _run_cycle_inner(
-    spark, world, store, batch_ts, days, max_per_host, max_waves, use_bloom,
-    stop_after_wave, salt_buckets, bloom_probe, seen_filter,
-    process_within_days, report, _tr,
+    spark, world, store, batch_ts, days, max_per_host, max_waves,
+    stop_after_wave, process_within_days, report, _tr,
 ) -> CycleReport:
-    if seen_filter not in ("bloom", "cuckoo"):
-        raise ValueError(f"unknown seen_filter: {seen_filter!r}")
     sites = world["sites"].filter(F.col("is_active")).orderBy("site_seq")
     seeds = sites.select("site_id", "site_seq", "sitemap_url")
 
     links_tbl = store.table("links")
     host_tbl = store.table("host_state")
-    seen_f = SeenFilter(store.table(seen_filter), links_tbl, seen_filter)
     logs_tbl = store.table("crawl_logs")
 
-    # Async state-commit lanes: links / host_state / bloom /
-    # logs / watermark commits don't gate the next wave's reads (their
+    # Async state-commit lanes: links / host_state / logs / watermark
+    # commits don't gate the next wave's reads (their
     # DataFrames stay in memory for the cycle), so they run on background
     # threads. All futures are joined before the cycle returns, so the
     # on-disk state a *completed* cycle leaves behind is unchanged.
@@ -400,31 +384,22 @@ def _run_cycle_inner(
         pending.append(fut)
         return fut
 
-    # Cycle-init state (seen read, seen-filter catch-up or rebuild,
-    # host-state read) is INDEPENDENT of sitemap discovery, so it runs on
+    # Cycle-init state (seen read, host-state read and deferred fold) is
+    # INDEPENDENT of sitemap discovery, so it runs on
     # a pool thread in the "init" FAIR scheduler pool: its small jobs
     # interleave with the expand stages instead of serializing ~1-3 s of
     # job latency after them. Joined right before the wave loop needs it.
     def _init_state():
         # SNAPSHOT-ISOLATED seen set: read ONCE at cycle start (the
         # SnapTable file list is immutable per snapshot). In-cycle
-        # additions are covered by the `attempted` set, so the filter
-        # made current here stays valid for the whole cycle — waves
-        # never touch it. Its commit rides the links lane.
+        # additions are covered by the `attempted` set, so every wave
+        # anti-joins against this one snapshot.
         spark.sparkContext.setLocalProperty("spark.scheduler.pool", "init")
         try:
-            links_snapshot = links_tbl.snapshot_id
             seen = links_tbl.read(spark)
-            filt = None
             if seen is None:
                 seen = spark.createDataFrame([], "url_key long")
-            elif use_bloom:
-                filt = seen_f.refresh(
-                    spark, at=links_snapshot, seen=seen,
-                    commit=lambda segs, summary: _async(
-                        seen_f.table.overwrite, segs, summary=summary,
-                        small=True, _lane="links"),
-                )
+            seen = seen.select("url_key")
 
             # host state: read once, then carried IN MEMORY between waves
             # (the table write is resume state only → async)
@@ -436,9 +411,8 @@ def _run_cycle_inner(
             # (lineage files + batch_ts) instead of running as the last
             # job of its commit tail — at cycle end there is no compute
             # left to hide the groupBy-host job behind, but HERE it
-            # overlaps sitemap discovery. Same discipline as the seen
-            # filter catch-up above. Unreadable fold files (retention) fall
-            # back to the stale base, which only ever over-throttles —
+            # overlaps sitemap discovery. Unreadable fold files (retention)
+            # fall back to the stale base, which only ever over-throttles —
             # the documented crash-resume semantics.
             _pend = host_tbl.summary().get("pending_fold")
             if _pend:
@@ -463,12 +437,7 @@ def _run_cycle_inner(
             # discovery (the limit-collect on an empty/small table still
             # costs 2-3 scale-up jobs of driver latency on the wave path)
             hs_rows0 = hs.limit(_HS_LITERAL_CAP + 1).collect()
-            # prebuild the broadcast probe (segment collect +
-            # sc.broadcast serialization) off the wave critical path too
-            probe_fn = None
-            if filt is not None and bloom_probe == "broadcast":
-                probe_fn = seen_f.probe_udf(spark, filt.segments)
-            return seen, filt, hs, hs_rows0, probe_fn
+            return seen, hs, hs_rows0
         finally:
             spark.sparkContext.setLocalProperty("spark.scheduler.pool", None)
 
@@ -561,7 +530,7 @@ def _run_cycle_inner(
             )
 
 
-        seen, filt, hs, hs_rows, probe_fn = fut_state.result()
+        seen, hs, hs_rows = fut_state.result()
         _tr("state_init")
 
         # In-cycle attempted set: the reference iterates its new-URL list ONCE
@@ -595,14 +564,7 @@ def _run_cycle_inner(
                 # init thread, overlapped with discovery.
                 hs_rows = hs.limit(_HS_LITERAL_CAP + 1).collect()
             hs_literal = len(hs_rows) <= _HS_LITERAL_CAP
-            unseen = dedup_unseen(
-                candidates, seen.select("url_key"),
-                segments=filt.segments if filt else None,
-                n_segments=SEGMENTS, probe=bloom_probe,
-                seen_count=filt.n_keys if filt else None,
-                probe_fn=probe_fn,
-                distributed_prober=seen_f.distributed_prober,
-            )
+            unseen = candidates.join(seen, on="url_key", how="left_anti")
             if attempted is not None:
                 unseen = unseen.join(attempted, on="url_key", how="left_anti")
 
@@ -634,9 +596,7 @@ def _run_cycle_inner(
             # (Round-1 ran 4 checkpoints + 4 commits per wave; the serial
             # barrier tail was the measured scaling-efficiency killer.)
             obs_v = Observation(f"valid_w{wave}")
-            rows_obs = fetch_and_validate(
-                scheduled, world, batch_ts, salt_buckets
-            )
+            rows_obs = fetch_and_validate(scheduled, world, batch_ts)
             rows_obs = build_link_rows(
                 rows_obs, batch_ts, sites=world["sites"],
                 keep=["politeness_deadline"],
@@ -736,13 +696,6 @@ def _run_cycle_inner(
                 slice_df if attempted is None
                 else attempted.unionByName(slice_df)
             )
-
-        # No end-of-cycle bloom/cuckoo delta (round 5): the delta build +
-        # merge + commit were the cycle's whole async-drain tail (no
-        # compute left to hide them behind). The NEXT cycle's init
-        # thread folds the links delta into the filter incrementally
-        # (bloom_catchup / cuckoo_catchup above), overlapped with
-        # sitemap discovery — same provenance discipline, zero tail.
 
         # host-state: ONE commit per cycle (the reference loses this state
         # entirely on restart — rate_limiter.py:16-24; we persist the
@@ -848,21 +801,21 @@ def _run_cycle_inner(
             ),
         )
         # FAILURE ATOMICITY: the watermark rides the LINKS lane, so it
-        # commits only after every queued links append (and the bloom
-        # commit chained behind them) succeeded. If an append fails, the
-        # lane-chained prev.result() poisons this future too, and on-disk
-        # state never says "crawled at batch_ts" while link rows are
-        # missing — the old independent lane could commit the watermark
-        # first and only surface the append error at the drain.
+        # commits only after every queued links append succeeded. If an
+        # append fails, the lane-chained prev.result() poisons this future
+        # too, and on-disk state never says "crawled at batch_ts" while
+        # link rows are missing — the old independent lane could commit the
+        # watermark first and only surface the append error at the drain.
         _async(store.table("sites").overwrite, sites_updated,
                summary={"op": "watermark"}, small=True, _lane="links")
         _tr("bookkeeping")
     finally:
         # join the detached init thread FIRST: on the discovery-error path
-        # _init_state may still be running and about to submit its bloom
-        # rebuild to the pool — shutting the pool down under it would turn
-        # the cycle error into an unrelated RuntimeError and could leave
-        # the thread running Spark jobs after the cycle raised. Its own
+        # _init_state may still be running and about to submit its
+        # host-state catch-up commit to the pool — shutting the pool down
+        # under it would turn the cycle error into an unrelated
+        # RuntimeError and could leave the thread running Spark jobs after
+        # the cycle raised. Its own
         # error (if any) is secondary to whatever is propagating.
         try:
             fut_state.result()
@@ -880,42 +833,17 @@ def _run_cycle_inner(
 def retention_cleanup(store: SnapStore, spark: SparkSession,
                       now: datetime, ttl_days: int = 2) -> None:
     """T10 (repository.py:432-450): TTL the seen store. Reference quirk
-    preserved: expired URLs become re-crawlable.
-
-    The delete rewrites links, so no seen filter can be caught up across
-    it: the next cycle rebuilds a bloom from the surviving rows. A cuckoo
-    is kept instead — its expired keys are DELETED in place,
-    O(expired + uncovered delta) rather than an O(seen) rebuild."""
+    preserved: expired URLs become re-crawlable — the next cycle's
+    anti-join reads links after the delete, so they are simply absent."""
     links = store.table("links")
     if links.exists():
         cutoff = (f"first_seen_at < timestamp'{now.isoformat(sep=' ')}' "
                   f"- INTERVAL {ttl_days} DAYS")
-        # Deleting a key that was never INSERTED can evict a colliding
-        # key's fingerprint — a false negative — so the cuckoo is first
-        # caught up to the links head. It and the expired keys are both
-        # materialized BEFORE the delete_where rewrite; a cuckoo that
-        # can't be caught up is left for the next cycle to rebuild.
-        cuckoo = SeenFilter(store.table("cuckoo"), links, "cuckoo")
-        state = cuckoo.catch_up(spark, links.snapshot_id)
-        if state is not None:
-            expired = materialize(
-                links.read(spark).filter(cutoff).select("url_key")
-            )
         links.delete_where(
             cutoff,
             spark,
             summary={"op": "retention", "ttl_days": ttl_days},
         )
-        if state is not None:
-            from spark_frontier.functions.cuckoo import delete_cuckoo_keys
-
-            state.segments = materialize(delete_cuckoo_keys(
-                state.segments, expired, n_segments=SEGMENTS
-            ))
-            state.n_keys = max(state.n_keys - expired.count(), 0)
-            state.op = "cuckoo_delete_after_retention"
-            cuckoo.commit_small(state.segments,
-                                cuckoo.summary(state, links.snapshot_id))
     # append-heavy log tables accumulate one file set per commit; the
     # 24 h maintenance pass bin-packs them (links is rewritten by the
     # delete_where above, so it is already compact)

@@ -45,7 +45,7 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.session.timeZone", "UTC")
         # FAIR across scheduler pools: the crawl cycle overlaps cycle-init
-        # jobs (bloom read/agg, host-state read) and async state commits
+        # jobs (host-state read and deferred fold) and async state commits
         # with the main discovery/wave jobs from other threads; FIFO would
         # park those 1-task jobs behind a 10 s parse stage
         .config("spark.scheduler.mode", "FAIR")

@@ -37,7 +37,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from spark_frontier.functions.seen_filter import SeenFilter
+from spark_frontier.functions.bloom import might_contain_udf
+from spark_frontier.functions.seen_filter import SEGMENTS, SeenFilter
 from spark_frontier.storage import SnapStore
 from spark_frontier.storage.materialize import materialize
 
@@ -118,7 +119,7 @@ def start_corpus_stream(
         segments = seen_f.current(spark_b) if use_bloom else None
         if committed is not None:
             if segments is not None:
-                probe = seen_f.probe_udf(spark_b, segments)
+                probe = might_contain_udf(spark_b, segments, SEGMENTS)
                 fresh = materialize(fresh)  # two consumers below
                 flagged = fresh.withColumn(
                     "_maybe", probe(F.col("url_key"))

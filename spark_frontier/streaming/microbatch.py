@@ -145,11 +145,11 @@ def start_stream_crawl(
     visibility). Crash-replay may re-land one batch's results — a
     double-fold only ever OVER-throttles.
 
-    BLOOM maintenance is NON-BLOCKING: ``SeenFilter.refresh`` (the batch
-    cycle's catch-up or rebuild) runs on a single-worker background
-    lane, so a stale bloom never stalls the micro-batch (links commit
-    first; a batch that arrives before the bloom lands just skips the
-    probe and pays the exact anti-join once). Commits serialize in batch
+    BLOOM maintenance is NON-BLOCKING: ``SeenFilter.refresh`` (catch-up
+    or rebuild) runs on a single-worker background lane, so a stale bloom
+    never stalls the micro-batch (links commit first; a batch that arrives
+    before the bloom lands just skips the probe and pays the exact
+    anti-join once). Commits serialize in batch
     order, and each records the links head it covers.
     """
     import os as _os
@@ -221,9 +221,9 @@ def start_stream_crawl(
         seen = links_tbl.read(spark)
         if seen is None:
             seen = spark.createDataFrame([], "url_key long")
-        # BLOOM PARITY with the batch cycle: probe the committed segments
-        # only when they cover the links HEAD (a stale bloom is skipped,
-        # never trusted); without it every micro-batch pays an O(seen)
+        # BLOOM short-circuit: probe the committed segments only when
+        # they cover the links HEAD (a stale bloom is skipped, never
+        # trusted); without it every micro-batch pays an O(seen)
         # anti-join shuffle.
         seen_f = SeenFilter(store.table("bloom"), links_tbl)
         unseen = dedup_unseen(

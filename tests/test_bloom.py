@@ -51,52 +51,8 @@ def test_dedup_exactness_with_and_without_bloom(spark):
     assert sorted(r["url_key"] for r in bloomed.collect()) == expected
 
 
-def test_distributed_probe_exact_and_no_driver_collect(spark, monkeypatch):
-    """probe='distributed' returns the exact unseen set WITHOUT collecting
-    segment bitmaps to the driver (the 10^10-key path)."""
-    import spark_frontier.functions.bloom as bloom_mod
-
-    rng = np.random.default_rng(10)
-    seen_keys = set(rng.integers(-(2**62), 2**62, size=4000).tolist())
-    frontier_keys = set(rng.integers(-(2**62), 2**62, size=4000).tolist())
-    frontier_keys.update(list(seen_keys)[:700])
-
-    seen = _keys_df(spark, sorted(seen_keys))
-    frontier = _keys_df(spark, sorted(frontier_keys))
-    expected = sorted(frontier_keys - seen_keys)
-
-    segments = build_bloom_segments(seen, n_segments=8).localCheckpoint()
-
-    def _no_collect(*a, **k):
-        raise AssertionError(
-            "distributed probe must not collect/broadcast segment bitmaps"
-        )
-
-    monkeypatch.setattr(bloom_mod, "might_contain_udf", _no_collect)
-    out = dedup_unseen(
-        frontier, seen, segments=segments, n_segments=8, probe="distributed"
-    )
-    assert sorted(r["url_key"] for r in out.collect()) == expected
-
-
-def test_distributed_probe_negative_passthrough(spark):
-    """Rows whose segment has no bitmap row are definitely-unseen and flow
-    through without an anti-join probe (negative pass-through shape)."""
-    from spark_frontier.functions.bloom import probe_distributed
-
-    seen = _keys_df(spark, [8, 16, 24])      # all pmod(...,8)==0 → one segment
-    frontier = _keys_df(spark, [8, 16, 3, 11, 5])
-    segments = build_bloom_segments(seen, n_segments=8)
-    flagged = {
-        r["url_key"]: r["_maybe_seen"]
-        for r in probe_distributed(frontier, segments, n_segments=8).collect()
-    }
-    assert flagged[8] and flagged[16]          # members always hit
-    assert not flagged[3] and not flagged[11] and not flagged[5]
-
-
 def test_broadcast_gate_falls_back_to_shuffle_above_cap(spark):
-    """ADVICE r3: probe='broadcast' must stop force-broadcasting the whole
+    """ADVICE r3: the bloom path must stop force-broadcasting the whole
     seen key set once it outgrows the cap — the anti-join then shuffles
     only the maybe-seen slice. Same exact result either way."""
     rng = np.random.default_rng(11)

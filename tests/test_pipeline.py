@@ -180,27 +180,39 @@ def test_retention_reopens_urls(spark, world, tmp_path_factory):
 
 
 def test_retention_leaves_one_bloom_rebuild(spark, world, tmp_path_factory):
-    """Retention rewrites links, so the next cycle's provenance check
-    rebuilds the bloom once from the surviving rows, and the cycle after
-    that catches it up. No second full build, and nothing re-crawls."""
+    """The crawl path keeps no seen filter: no cycle or retention pass
+    creates a ``bloom`` or ``cuckoo`` table. Retention's delete is the
+    whole TTL story — the next cycle's exact anti-join reads links after
+    it, so the expired URLs are saved again, and the cycle after that
+    re-crawls nothing."""
+    def _no_filter_tables():
+        assert not {"bloom", "cuckoo"} & set(store.table_names())
+
+    def _keys():
+        return {r["url_key"] for r in
+                store.table("links").read(spark).select("url_key").collect()}
+
     store = _fresh_store(tmp_path_factory)
     seed_seen_store(store, world["url_seen"])
     run_crawl_cycle(spark, world, store, batch_ts=NOW, days=7)
-    bloom = store.table("bloom")
-    n_hist = len(bloom.history())
+    _no_filter_tables()
 
+    before = _keys()
     retention_cleanup(store, spark, now=NOW, ttl_days=2)
-    n_after = store.table("links").read(spark).count()
-    run_crawl_cycle(spark, world, store, batch_ts=NOW, days=7)
-    n_readmit = store.table("links").read(spark).count()
-    assert n_readmit > n_after  # expired URLs re-admitted (T10 quirk)
-    run_crawl_cycle(spark, world, store, batch_ts=NOW, days=7)
+    _no_filter_tables()
+    kept = _keys()
+    expired = before - kept
+    assert expired
 
-    ops = [h["summary"].get("op") for h in bloom.history()[n_hist:]]
-    assert ops == ["bloom_build", "bloom_catchup"]
-    assert bloom.summary()["covers_links"] in [
-        h["snapshot_id"] for h in store.table("links").history()
-    ]
+    rep = run_crawl_cycle(spark, world, store, batch_ts=NOW, days=7)
+    _no_filter_tables()
+    readmitted = _keys() - kept
+    assert readmitted & expired  # expired URLs saved again (T10 quirk)
+    assert rep.saved == len(readmitted)
+    n_readmit = len(kept) + len(readmitted)
+
+    run_crawl_cycle(spark, world, store, batch_ts=NOW, days=7)
+    _no_filter_tables()
     links = store.table("links").read(spark)
     assert links.count() == n_readmit
     assert links.select("url_key").distinct().count() == n_readmit
@@ -279,15 +291,24 @@ def test_reliable_checkpoint_mode(spark, tmp_path_factory, monkeypatch):
 
 def test_legacy_bloom_without_n_segments_is_rebuilt(spark, world,
                                                     tmp_path_factory):
-    """ADVICE r3: a bloom snapshot written before n_segments was recorded
-    must be treated as STALE (unknown modulus → wrong-bitmap probes →
-    false negatives), not assumed current."""
+    """ADVICE r3: a stream bloom snapshot written before n_segments was
+    recorded must be treated as STALE (unknown modulus → wrong-bitmap
+    probes → false negatives): the crawl stream rebuilds it instead of
+    catching it up."""
     import json
+
+    from spark_frontier.frontier.recency import filter_recent
+    from spark_frontier.functions.seen_filter import SEGMENTS, SeenFilter
+    from spark_frontier.sitemap.expand import expand_sitemap_tree
+    from spark_frontier.streaming.microbatch import (
+        CANDIDATE_DDL,
+        start_stream_crawl,
+    )
 
     store = _fresh_store(tmp_path_factory)
     seed_seen_store(store, world["url_seen"])  # bloom needs a seen set
-    run_crawl_cycle(spark, world, store, batch_ts=NOW, days=7)
     bloom = store.table("bloom")
+    SeenFilter(bloom, store.table("links")).refresh(spark)
     sid = bloom.snapshot_id
     mpath = os.path.join(bloom.path, "snapshots", f"{sid}.json")
     with open(mpath) as f:
@@ -296,15 +317,29 @@ def test_legacy_bloom_without_n_segments_is_rebuilt(spark, world,
     with open(mpath, "w") as f:
         json.dump(manifest, f)
 
-    run_crawl_cycle(spark, world, store, batch_ts=NOW, days=7)
-    bloom2 = store.table("bloom")
-    # cycle 2 must have REBUILT (op=bloom_build after the edited snapshot),
-    # not trusted the legacy bloom; a delta for the cycle's keys may follow
-    hist = bloom2.history()
+    sites = world["sites"].filter(F.col("is_active")).orderBy("site_seq")
+    entries = expand_sitemap_tree(
+        sites.select("site_id", "site_seq", "sitemap_url"),
+        world["sitemap_pages"],
+    )
+    cand_dir = str(tmp_path_factory.mktemp("legacy_cand"))
+    cols = [c.split(" ")[0] for c in CANDIDATE_DDL.split(", ")]
+    filter_recent(entries, sites, days=7, now=NOW).selectExpr(
+        *cols).repartition(1).write.mode("overwrite").parquet(cand_dir)
+    q = start_stream_crawl(
+        spark, cand_dir, world, store,
+        str(tmp_path_factory.mktemp("legacy_ckpt")), batch_ts=NOW,
+        max_per_host=10_000, available_now=True,
+    )
+    q.awaitTermination(300)
+
+    # the stream must have REBUILT (op=bloom_build after the edited
+    # snapshot), not caught up the legacy bloom
+    hist = store.table("bloom").history()
     idx = [h["snapshot_id"] for h in hist].index(sid)
     ops_after = [h["summary"].get("op") for h in hist[idx + 1:]]
-    assert "bloom_build" in ops_after
-    assert bloom2.summary().get("n_segments") == 16
+    assert ops_after and ops_after[0] == "bloom_build"
+    assert store.table("bloom").summary().get("n_segments") == SEGMENTS
 
 
 def test_links_append_failure_aborts_watermark(spark, world, tmp_path_factory,
@@ -330,83 +365,6 @@ def test_links_append_failure_aborts_watermark(spark, world, tmp_path_factory,
     # watermark chained on the links lane → poisoned by the failed append
     assert store.table("sites").snapshot_id is None
     assert store.table("links").snapshot_id is None
-
-
-def test_cuckoo_seen_filter_matches_bloom_and_deletes_on_ttl(
-    spark, world, tmp_path_factory
-):
-    """seen_filter='cuckoo' end-to-end: cycle results identical to the
-    bloom mode (the probe never decides); retention DELETES expired keys
-    from the filter in place (no O(seen) rebuild) with provenance kept,
-    and the next cycle re-admits the expired URLs without rebuilding."""
-    from spark_frontier.pipeline.crawl import retention_cleanup
-
-    stores = {}
-    for mode, probe in (("bloom", "broadcast"), ("cuckoo", "broadcast"),
-                        ("cuckoo-dist", "distributed")):
-        st = _fresh_store(tmp_path_factory)
-        seed_seen_store(st, world["url_seen"])
-        run_crawl_cycle(
-            spark, world, st, batch_ts=NOW, days=7,
-            seen_filter=mode.split("-")[0], bloom_probe=probe,
-        )
-        stores[mode] = st
-    a = sorted(r["url_key"] for r in
-               stores["bloom"].table("links").read(spark)
-               .select("url_key").collect())
-    b = sorted(r["url_key"] for r in
-               stores["cuckoo"].table("links").read(spark)
-               .select("url_key").collect())
-    assert a == b
-    # round-5: the distributed (cogroup) cuckoo probe is cycle-identical
-    # to the broadcast probe and to the bloom path
-    c = sorted(r["url_key"] for r in
-               stores["cuckoo-dist"].table("links").read(spark)
-               .select("url_key").collect())
-    assert a == c
-    stores["cuckoo"] = stores["cuckoo-dist"]  # reuse the dist store below
-
-    st = stores["cuckoo"]
-    cuckoo = st.table("cuckoo")
-    assert cuckoo.exists()
-    meta0 = cuckoo.summary()
-    # round 5: cycle ends no longer commit a delta (the commit tail);
-    # the filter lags links and is caught up at next-cycle init
-    assert meta0["op"] == "cuckoo_build"
-    links_hist = [h["snapshot_id"] for h in st.table("links").history()]
-    assert meta0["covers_links"] in links_hist  # ancestor of HEAD
-
-    n_before = st.table("links").read(spark).count()
-    retention_cleanup(st, spark, now=NOW, ttl_days=2)
-    n_after = st.table("links").read(spark).count()
-    assert n_after < n_before
-    meta1 = cuckoo.summary()
-    assert meta1["op"] == "cuckoo_delete_after_retention"  # NOT a rebuild
-    assert meta1["covers_links"] == st.table("links").snapshot_id
-    # retention folds the uncovered delta in, then deletes: the filter
-    # now holds exactly one key per surviving link row
-    assert meta1["n_keys"] == n_after
-
-    # next cycle: provenance is current → filter reused as-is, and the
-    # expired URLs re-admit (the T10 quirk) through the cuckoo path
-    rep = run_crawl_cycle(
-        spark, world, st, batch_ts=NOW, days=7, seen_filter="cuckoo"
-    )
-    n_readmit = st.table("links").read(spark).count()
-    assert n_readmit > n_after
-    assert cuckoo.summary()["op"] == "cuckoo_delete_after_retention"
-
-    # cycle after that: the filter lags by the re-admitted keys → init
-    # catch-up folds them in-place (no rebuild), and NOTHING re-crawls
-    # (a catch-up false negative would leak duplicates into links)
-    run_crawl_cycle(
-        spark, world, st, batch_ts=NOW, days=7, seen_filter="cuckoo"
-    )
-    assert cuckoo.summary()["op"] == "cuckoo_catchup"
-    assert cuckoo.summary()["covers_links"] in [
-        h["snapshot_id"] for h in st.table("links").history()
-    ]
-    assert st.table("links").read(spark).count() == n_readmit
 
 
 def test_first_per_key_matches_window(spark):
